@@ -26,6 +26,16 @@ def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
 
 
+def _query_vec(head: dict):
+    """The query vector, ``vec_id = 0``, from a model-sized head collect.
+
+    The ANN keys search for the neighbours of that one row; an
+    ``embeddings`` table without it has no query to answer."""
+    if 0 not in head:
+        raise ValueError("embeddings has no query row (vec_id = 0)")
+    return head[0]
+
+
 def _dot(a, b):
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
@@ -351,7 +361,7 @@ def ext_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id").between(0, _N_PIVOTS))
         .collect()
     }
-    qv = head[0]
+    qv = _query_vec(head)
     pids = np.array(sorted(k for k in head if k >= 1), dtype="int64")
     pmat = np.stack([head[int(p)] for p in pids])
     # driver-side probe selection: exact-fold pivot-vs-query cosines, same
@@ -765,7 +775,7 @@ def ext_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id").between(0, _LSH_ANCHORS))
         .collect()
     }
-    qv = head[0]
+    qv = _query_vec(head)
     # plane derivation replicates the old JVM frame arithmetic: anchor
     # pair (2j-1, 2j) of block t spans plane (t, j) with hv = av - bv
     tables: list[tuple] = []  # (bits_vec (m,), h_mat (m, d)) per table
@@ -1434,7 +1444,7 @@ def ext_ann_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         int(r["vec_id"]): np.array(r["v"], dtype="float64")
         for r in v.filter(F.col("vec_id").between(0, _PQ_K)).collect()
     }
-    qv = head[0]
+    qv = _query_vec(head)
     cmat = np.stack([head[c] for c in sorted(head) if c >= 1])
     qd = _pq_query_dist_arrays(qv, cmat)
 
@@ -1628,7 +1638,7 @@ def ext_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id").between(0, max(_N_PIVOTS, _PQ_K)))
         .collect()
     }
-    qv = head[0]
+    qv = _query_vec(head)
     pids = np.array(
         sorted(k for k in head if 1 <= k <= _N_PIVOTS), dtype="int64"
     )

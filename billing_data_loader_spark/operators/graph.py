@@ -519,16 +519,12 @@ def ext_hits_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     a1 = edges.groupBy("part").agg(F.count(F.lit(1)).alias("s"))
-    # UNHINTED reinforcement joins (r14, VERDICT r13 #3): the r13
-    # SHUFFLE_HASH hints were re-adjudicated and REVERTED. The r13
-    # per-round microbenchmark (0.66 SHJ vs 0.78 SMJ) did not survive
-    # whole-key measurement: the driver's own bench showed the hinted
-    # form regressing (3.33 -> 4.61 s at 8c), the r14 32c bench read
-    # 3.38 hinted, and four r14 gated A/B sessions put unhinted at
-    # min 2.39/2.76 vs hinted 3.81/2.56 — noisy, but nothing
-    # reproduces a hint win at whole-key grain. Unhinted also leaves
-    # AQE free to pick the strategy (incl. broadcast conversion) from
-    # runtime sizes at any scale.
+    # Both reinforcement joins broadcast their aggregated side (a1: one
+    # row per part, h1: one row per cust) through F.broadcast hints. The
+    # hints have not been measured at whole-key grain against the unhinted
+    # joins, which leave AQE to pick the strategy from runtime sizes.
+    # Keeping or reverting them is left to the broadcast-hint audit
+    # against AQE (ROADMAP.md).
     h1 = scoped_persist(
         edges.join(F.broadcast(a1), "part")
         .groupBy("cust")

@@ -392,21 +392,17 @@ def ext_neardup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity is asserted at both sf0.01 and sf0.1, so a hash collision in the
     fixture vocabulary would be caught, not silently absorbed."""
     corpus = _corpus_with_dups(spark, sf_dir)
-    # persist the RANKED frame (shingles + df/pos/n_tok): it feeds the
-    # prefix ranking and the verification arrays. 8-byte hashes,
-    # ~shingles(corpus) rows — the compact intermediate this operator is
-    # built around; at 100 TB the same cache (or a checkpoint) avoids
-    # re-reading raw text.
-    # doc-frequency via a window over (lang, th) rather than a groupBy +
-    # join-back: same result, one shuffle of the shingle table instead of
-    # two. The (doc_id) window that follows re-keys once more, and its
-    # output partitioning is REUSED by both the prefix ranking and the
-    # verification-array aggregate below — the shingle table crosses the
-    # network exactly twice end-to-end (measured 3.8 s -> 3.1 s at sf0.1,
-    # and the dedup-cluster consumer drops 7.0 s -> 5.4 s).
+    # ranked = shingles + df/pos/n_tok. Doc-frequency comes from a window
+    # over (lang, th) rather than a groupBy + join-back (one shuffle of the
+    # shingle table instead of two); the (doc_id) window re-keys once more.
+    # ranked is not cached. Its two consumers (the prefix self-join and the
+    # verification-array aggregate) share its shingle exchanges through
+    # exchange reuse, and AQE sizes every stage from runtime statistics.
+    # A cache would pin its last shuffle at spark.sql.shuffle.partitions,
+    # because AQE never changes the output partitioning of a cached plan.
     tok = _hashed_shingle_tokens(corpus)
     doc_w = W.partitionBy("doc_id").orderBy("df", "th")
-    ranked = scoped_persist(
+    ranked = (
         tok.withColumn(
             "df", F.count(F.lit(1)).over(W.partitionBy("lang", "th"))
         )

@@ -210,6 +210,14 @@ def prep(spark: SparkSession) -> SparkSession:
         spark.sparkContext.environment.update(_WORKER_THREAD_ENV)
     except Exception:
         pass
+    # WindowExec warns "No Partition Defined for Window operation" on every
+    # global window. tools/plan_audit.py's global_window gate already
+    # justifies each one per key, so that logger keeps only ERROR lines.
+    jvm = spark.sparkContext._jvm  # noqa: SLF001
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.window.WindowExec",
+        jvm.org.apache.logging.log4j.Level.ERROR,
+    )
     if not getattr(spark, "_bdl_pyfiles_added", False):
         spark.sparkContext.addPyFile(_package_zip())
         spark._bdl_pyfiles_added = True  # noqa: SLF001 - per-session marker

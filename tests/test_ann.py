@@ -3,6 +3,11 @@ rows-only oracle can't express)."""
 
 from __future__ import annotations
 
+import os
+
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from billing_data_loader_spark.operators.ann import ext_ann_ivf
@@ -13,6 +18,8 @@ from billing_data_loader_spark.operators.text_analysis import (
 from billing_data_loader_spark.operators.llm_pipeline import (
     _corpus_with_dups,
 )
+from billing_data_loader_spark.plans.catalog import catalog
+from billing_data_loader_spark.tables import TABLE_NAMES
 
 from .conftest import SF_DIR
 
@@ -143,3 +150,28 @@ def test_residual_pq_cells_match_ivf_assignment(spark):
             key=lambda p: (cos(v, emb[p]), -p),
         )
         assert r["cell_id"] == want, (r["vec_id"], r["cell_id"], want)
+
+
+@pytest.fixture(scope="module")
+def no_query_row_dir(tmp_path_factory):
+    """The sf0.01 fixture with the query row (vec_id = 0) removed from
+    embeddings; every other table symlinks to the original."""
+    out = tmp_path_factory.mktemp("no_query_row")
+    emb = pq.read_table(os.path.join(SF_DIR, "embeddings.parquet"))
+    pq.write_table(
+        emb.filter(pc.not_equal(emb["vec_id"], 0)), out / "embeddings.parquet"
+    )
+    for t in TABLE_NAMES:
+        if t != "embeddings":
+            os.symlink(os.path.join(SF_DIR, f"{t}.parquet"), out / f"{t}.parquet")
+    return str(out)
+
+
+@pytest.mark.parametrize(
+    "key", ["ext_ann_ivf", "ext_ann_lsh", "ext_ann_pq_search", "ext_ann_ivfpq"]
+)
+def test_ann_missing_query_row_raises_named_error(spark, no_query_row_dir, key):
+    """An embeddings table without the query row fails with a ValueError
+    that names the missing row, not a KeyError from the head lookup."""
+    with pytest.raises(ValueError, match=r"query row \(vec_id = 0\)"):
+        catalog()[key].fn(spark, no_query_row_dir)

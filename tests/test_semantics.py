@@ -104,6 +104,24 @@ def test_jaccard_hashed_shingles_match_oracle_at_sf01(spark):
     assert ok, msg
 
 
+def test_jaccard_caches_nothing(spark):
+    """ext_neardup_jaccard runs without a cache, so AQE can size every
+    stage: a cached intermediate pins its last shuffle at
+    spark.sql.shuffle.partitions, because AQE never changes the output
+    partitioning of a cached plan."""
+
+    def pids():
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()  # noqa: SLF001
+        return {int(k) for k in jmap.keySet().toArray()}
+
+    before = pids()
+    df = ext_neardup_jaccard(spark, SF_DIR)
+    df.toPandas()
+    plan = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+    assert "InMemoryTableScan" not in plan
+    assert not (pids() - before)
+
+
 def test_sink_idempotent_double_run(spark):
     """The idempotency contract SURVEY §5 promises: running the
     idempotent-overwrite load twice produces the identical table —

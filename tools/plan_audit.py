@@ -99,8 +99,9 @@ AUDITED = {
         "bound) restricts the inverted-index self-join to each doc's "
         "globally rarest shingles — hot boilerplate shingles sort LAST and "
         "never enter a prefix, so no O(d^2) hot-key blowup; doc frequency "
-        "comes from a window (one shuffle), and the doc-partitioned ranked "
-        "frame is reused for the verification arrays."
+        "comes from a window (one shuffle). The ranked frame is not cached: "
+        "the prefix join and the verification arrays share its shingle "
+        "exchanges through exchange reuse, and AQE sizes every stage."
     ),
     "ext_bloom_decontaminate": (
         "Bloom-prefiltered decontamination (round 4): the benchmark set "
